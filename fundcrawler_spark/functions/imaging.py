@@ -85,6 +85,27 @@ def _dct_matrix(n: int = 8) -> np.ndarray:
 _QSTEP = 4.0  # uniform quant step; ~46 dB PSNR on natural-ish noise
 
 
+def _fixed_matmul(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``a @ b`` over the last two axes, summed over j = 0, 1, ... with a
+    separately rounded multiply and add per term.
+
+    A DC coefficient of an integer block is an exact multiple of 1/32
+    after quantization, so .5 ties are common, and the last bit of the
+    product decides which way they round. BLAS picks a CPU-specific
+    kernel (FMA or not, split accumulators or not) and so does not fix
+    that bit; this loop does, on every CPU. It is the order of the
+    non-FMA BLAS kernels the frozen fixtures were generated with."""
+    acc = a[..., :, 0:1] * b[..., 0:1, :]
+    for j in range(1, a.shape[-1]):
+        acc += a[..., :, j:j + 1] * b[..., j:j + 1, :]
+    return acc
+
+
+def _dct2(x: np.ndarray, m: np.ndarray) -> np.ndarray:
+    """2D DCT ``m @ x @ m.T``, evaluated left to right in fixed order."""
+    return _fixed_matmul(_fixed_matmul(m, x), m.T)
+
+
 def _blockify(ch: np.ndarray) -> tuple[np.ndarray, int, int]:
     h, w = ch.shape
     ph, pw = (-h) % 8, (-w) % 8
@@ -100,8 +121,7 @@ def encode_dctq(arr: np.ndarray) -> bytes:
     out = []
     for ci in range(c):
         blocks, _, _ = _blockify(arr[:, :, ci].astype(np.float64) - 128.0)
-        coef = m @ blocks @ m.T
-        q = np.round(coef / _QSTEP).astype(np.int16)
+        q = np.round(_dct2(blocks, m) / _QSTEP).astype(np.int16)
         out.append(q.tobytes())
     payload = zlib.compress(b"".join(out), 6)
     return struct.pack("<4sHHB", b"DCQ1", w, h, c) + payload
@@ -119,7 +139,7 @@ def decode_dctq(data: bytes) -> np.ndarray:
     for ci in range(c):
         q = np.frombuffer(raw[ci * per : (ci + 1) * per], dtype=np.int16)
         q = q.reshape(H // 8, W // 8, 8, 8).astype(np.float64) * _QSTEP
-        blocks = m.T @ q @ m
+        blocks = _dct2(q, m.T)
         ch = blocks.transpose(0, 2, 1, 3).reshape(H, W)[:h, :w] + 128.0
         chans.append(np.clip(np.round(ch), 0, 255).astype(np.uint8))
     return np.stack(chans, axis=-1)
@@ -174,8 +194,9 @@ def phash64(arr: np.ndarray) -> int:
     k = np.arange(n)
     m = np.sqrt(2.0 / n) * np.cos((2 * k[None, :] + 1) * k[:, None] * np.pi / (2 * n))
     m[0, :] = np.sqrt(1.0 / n)
-    dct = m @ small @ m.T
-    block = dct[:8, :8].flatten()
+    # only the top-left 8x8 of the DCT is used: rows 0-7 of m give it
+    # directly, term for term the same sums as the full transform
+    block = _dct2(small, m[:8]).flatten()
     med = np.median(block[1:])  # exclude DC
     bits = (block > med).astype(np.uint64)
     val = np.uint64(0)

@@ -177,7 +177,7 @@ FETCH_LOG_SCHEMA = T.StructType(
 # ------------------------------------------------- incomplete-seeds pool
 # Barrier pages of seeds that have not yet passed the 4-page barrier —
 # persisted alongside each durable checkpoint so resume is O(pool)
-# instead of a full pages-table scan (wave_loop.finalize_increment).
+# instead of a full pages-table scan (wave_loop.Crawler._finalize_increment).
 INCOMPLETE_POOL_SCHEMA = T.StructType(
     [
         T.StructField("seed_index", T.LongType(), False),

@@ -3,7 +3,7 @@ finished crawl's pages table into a filtered, deduplicated training
 corpus plus a composition report — the end-to-end bridge between the
 engine's two halves.
 
-    make dist
+    make dist    # run first: builds dist/fundcrawler_spark.zip (not committed)
     spark-submit --py-files dist/fundcrawler_spark.zip \
         jobs/corpus_job.py --crawl-workdir /tmp/crawl --out /tmp/corpus
 

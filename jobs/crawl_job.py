@@ -1,6 +1,6 @@
 """spark-submit entry point for the crawl engine.
 
-    make dist
+    make dist    # run first: builds dist/fundcrawler_spark.zip (not committed)
     spark-submit --py-files dist/fundcrawler_spark.zip \
         jobs/crawl_job.py --workdir /tmp/crawl --seeds 100 [--resume]
 

@@ -66,9 +66,11 @@ def test_split_frontier_with_forced_refills_matches_simulator(spark):
     reference-semantics simulator bit-for-bit, and the incremental
     count cross-check runs every wave."""
     seeds = spark.createDataFrame(fx.seed_rows(120), SEEDS_SCHEMA)
+    waves = []
     cfg = CrawlConfig(fail_rate=0.07, max_fail_attempts=1, max_waves=40,
                       n_shards=8, max_budget=40, active_slice_waves=1,
-                      checkpoint_every=3, verify_host_counts=True)
+                      checkpoint_every=3, verify_host_counts=True,
+                      wave_hook=waves.append)
     wd = tempfile.mkdtemp(prefix="split_")
     try:
         c = Crawler(spark, wd, cfg)
@@ -85,6 +87,20 @@ def test_split_frontier_with_forced_refills_matches_simulator(spark):
             sim_last[h] = (o, w)
         assert eng == {h: sim_last[h] for h in eng}
         assert set(eng) == sim["seen"]
+
+        # wave_hook contract: the keys perfbench and bench_extra.py read,
+        # and phase times that add up to the wave time
+        assert [w["wave"] for w in waves] == list(range(stats["waves"]))
+        assert any(w["durable_ckpt"] for w in waves)
+        assert any(not w["durable_ckpt"] for w in waves)
+        for w in waves:
+            assert {"wave", "wave_sec", "durable_ckpt", "refilled_hosts",
+                    "fetch_agg_sec", "discover_sec", "checkpoint_sec"} <= set(w)
+            if w["durable_ckpt"]:
+                assert {"ckpt_flush_sec", "ckpt_write_sec"} <= set(w)
+            phases = (w["refill_sec"] + w["fetch_agg_sec"]
+                      + w["discover_sec"] + w["checkpoint_sec"])
+            assert abs(phases - w["wave_sec"]) <= 0.01, w
     finally:
         shutil.rmtree(wd)
 

@@ -24,6 +24,41 @@ def test_dctq_psnr_at_least_40db():
         assert imaging.psnr(arr, out) >= 40.0
 
 
+def test_dctq_exact_tie_block_encoding_pinned():
+    """The DC coefficient of this block, divided by the quant step, is
+    exactly 10.5 in exact arithmetic (sum 336 = 32 * 10 + 16), so its
+    quantized value depends on the last bit of the DCT. The fixed order
+    lands exactly on 10.5 (half to even: 10); an FMA BLAS kernel gives
+    10.500000000000002 and would encode 11."""
+    import zlib
+
+    block = np.array([
+        [32, -17, 32, 13, 31, -25, 20, 35], [-37, -11, 10, -32, 0, 10, 21, 34],
+        [-8, -5, -3, 36, -25, -1, -37, -6], [35, 9, -13, 39, 8, 35, -39, -4],
+        [26, 20, -8, -1, -7, 2, -22, 22], [-34, -7, -18, 18, 19, 16, 33, 34],
+        [-26, -31, -30, 18, 37, 34, 13, 37], [29, -39, -31, 29, -34, 38, 26, 36],
+    ])
+    assert block.sum() == 32 * 10 + 16
+    data = imaging.encode_dctq((block + 128).astype(np.uint8)[:, :, None])
+    q = np.frombuffer(zlib.decompress(data[9:]), dtype=np.int16).reshape(8, 8)
+    assert q[0, 0] == 10
+
+    # the same DC from plain Python floats in the documented order:
+    # (m @ b) row 0, then its dot with m row 0, each summed j = 0, 1, ...
+    m0 = imaging._dct_matrix()[0].tolist()
+    b = block.astype(float).tolist()
+    row0 = []
+    for k in range(8):
+        acc = m0[0] * b[0][k]
+        for j in range(1, 8):
+            acc = acc + m0[j] * b[j][k]
+        row0.append(acc)
+    dc = row0[0] * m0[0]
+    for k in range(1, 8):
+        dc = dc + row0[k] * m0[k]
+    assert dc / 4.0 == 10.5
+
+
 def test_phash_properties():
     a = fx.make_image("ha", 64, 64)
     b = fx.make_image("hb", 64, 64)

@@ -58,6 +58,30 @@ def test_torn_checkpoint_not_resumed(spark):
         shutil.rmtree(wd)
 
 
+def test_pre_pool_checkpoint_rejected(spark):
+    """A checkpoint whose meta.json has no 'has_incomplete_pool' record
+    predates the pool format: resume must refuse it before reading any
+    checkpoint data."""
+    import json
+    import os
+
+    import pytest
+
+    wd = tempfile.mkdtemp(prefix="prepool_")
+    try:
+        d = os.path.join(wd, "checkpoints", "wave=00002")
+        os.makedirs(d)
+        with open(os.path.join(d, "meta.json"), "w") as f:
+            json.dump({"wave": 2, "order_offset": 8, "budgets": {},
+                       "snapshots": {}}, f)
+        open(os.path.join(d, "_COMPLETE"), "w").close()
+        c = Crawler(spark, wd, CrawlConfig(n_shards=4))
+        with pytest.raises(RuntimeError, match="has_incomplete_pool"):
+            c.run(resume=True, log=lambda *a: None)
+    finally:
+        shutil.rmtree(wd)
+
+
 def test_fresh_run_refuses_dirty_workdir(spark):
     """A fresh run must not silently destroy a prior crawl: it raises on
     a dirty workdir unless overwrite=True is passed explicitly."""
